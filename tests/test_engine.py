@@ -3,6 +3,9 @@ lifecycle — etl → train → promote → predict → evaluate → health."""
 
 from __future__ import annotations
 
+import itertools
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,6 +67,97 @@ def test_predict_does_not_leak_cached_blocks(spark, engine):
     engine.predict_weather(limit=20)
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     assert after <= before, f"leaked cached RDDs: {after - before}"
+
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    """An engine whose v1 was trained and promoted in this process. Its
+    source advances the clock on every poll, so each run_etl adds later
+    rows."""
+    root = str(tmp_path_factory.mktemp("served"))
+    polls = itertools.count()
+
+    def source(s):
+        k = next(polls)
+        return synthetic_weather(s, n_batches=12, seed=42 + k, start_unix=1_700_000_000 + k * 3600)
+
+    eng = WeatherEngine(spark, root, source=source)
+    eng.run_etl()
+    eng.promote(eng.train_models(n_splits=1, n_trees=3)["version"])
+    return eng
+
+
+def _rows(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_predict_scores_once_sink_matches_returned_rows(spark, served):
+    """One predict call's sink rows are exactly its returned non-NULL rows,
+    and the returned frame is over the scored rows: collecting it runs no
+    Spark job (no feature building, no model), and collecting it again
+    after more ETL gives the same rows."""
+    sc = spark.sparkContext
+    for call, col, kind in (
+        (served.predict_temperature, "pred_temperature", "regression"),
+        (served.predict_weather, "pred_condition", "classification"),
+    ):
+        def sunk():
+            if "predictions" not in served.collections():
+                return Counter()
+            rows = served.table("predictions").filter(F.col("pred_type") == kind)
+            return Counter(_rows(rows, "city", "timestamp", col))
+
+        before = sunk()
+        out = call(limit=40)
+        sc.setJobGroup(f"collect-{kind}", kind)
+        try:
+            first = _rows(out, "city", "timestamp", col)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"collect-{kind}") == []
+        assert len(first) == 40
+        scored = Counter(r for r in first if r[2] is not None)
+        assert scored and sunk() - before == scored
+        served.run_etl()
+        assert _rows(out, "city", "timestamp", col) == first
+
+
+def test_production_model_served_from_memory(spark, served, monkeypatch):
+    """The bundle train_models just logged serves predict/evaluate with no
+    registry.load; a Production change costs exactly one load, and so does
+    a fresh engine over the same registry."""
+    from weatherdatapipeline_spark.ml.registry import LocalRegistry
+
+    loads = []
+    original = LocalRegistry.load
+
+    def counting_load(self, spark_, mv):
+        loads.append(mv.version)
+        return original(self, spark_, mv)
+
+    monkeypatch.setattr(LocalRegistry, "load", counting_load)
+
+    def serve(eng):
+        rows = _rows(eng.predict_temperature(limit=30), "city", "timestamp", "pred_temperature")
+        eng.predict_weather(limit=30)
+        eng.evaluate(limit=100)
+        return rows
+
+    v1_memory = serve(served)
+    assert loads == []
+    v2 = served.train_models(n_splits=1, n_trees=2)["version"]
+    served.promote(v2)
+    serve(served)
+    assert loads == []
+    served.promote(1)
+    v1_loaded = serve(served)
+    assert loads == [1]
+    # the reloaded bundle scores exactly like the in-memory one
+    assert v1_loaded == v1_memory
+
+    fresh = WeatherEngine(spark, served.catalog.root, source=served.source)
+    serve(fresh)
+    assert loads == [1, 1]
 
 
 def test_predict_without_model_raises(spark, tmp_path_factory):

@@ -177,3 +177,63 @@ def test_align_features_patches_schema(spark):
 def test_discover_categories_sorted(spark):
     df = spark.createDataFrame([("b",), ("a",), ("c",), ("a",)], "city string")
     assert discover_categories(df, ["city"]) == {"city": ["a", "b", "c"]}
+
+
+def test_discover_categories_one_scan_drops_nulls(spark):
+    """All columns come from ONE aggregate: the job count does not grow with
+    the column count (AQE runs the shuffle map stage as its own job, so one
+    aggregate is at most two jobs). NULL is never a level; empty input gives
+    empty level lists."""
+    df = spark.createDataFrame(
+        [("b", "y", 3, None), (None, "x", 1, 2), ("a", None, 3, 2)],
+        "city string, country string, hour int, dayofweek int",
+    )
+    sc = spark.sparkContext
+
+    def jobs(group, cols):
+        sc.setJobGroup(group, group)
+        try:
+            got = discover_categories(df, cols)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, n_one = jobs("discover-1", ["city"])
+    four, n_four = jobs("discover-4", ["city", "country", "hour", "dayofweek"])
+    assert one == {"city": ["a", "b"]}
+    assert four == {"city": ["a", "b"], "country": ["x", "y"], "hour": [1, 3], "dayofweek": [2]}
+    assert n_four == n_one <= 2
+    assert discover_categories(df.limit(0), ["city", "hour"]) == {"city": [], "hour": []}
+
+
+NUMERIC_CONTRACT = [
+    "temperature", "feels_like", "humidity", "pressure", "wind_speed",
+    "temp_lag_1", "humidity_lag_1", "wind_lag_1", "pressure_lag_1",
+    "temp_lag_3", "humidity_lag_3", "wind_lag_3", "pressure_lag_3",
+    "temp_rollmean_3", "temp_rollstd_3", "humidity_rollmean_3",
+]
+
+
+@pytest.mark.parametrize("inference", [True, False])
+@pytest.mark.parametrize(
+    "categories, onehots",
+    [
+        (
+            None,
+            ["city_Beta", "city_Delta", "city_Gamma", "country_BB", "country_DD", "country_GG"],
+        ),
+        (
+            {"dayofweek": [0, 1], "hour": [21, 22, 23], "country": ["AA"], "city": ["Alpha", "Beta"]},
+            ["city_Beta", "hour_22", "hour_23", "dayofweek_1"],
+        ),
+    ],
+)
+def test_feature_column_order_is_the_serving_contract(spark, inference, categories, onehots):
+    """The exact column order of the frame and of ``feature_cols`` — the
+    list the registry stores and inference realigns to. One-hots follow the
+    numeric features in ONE_HOT_COLS order (whatever the dict order), each
+    column's sorted levels minus the first."""
+    sdf = spark.createDataFrame(pd.DataFrame(fixture_rows()))
+    feat, cols = engineer_features(sdf, inference=inference, categories=categories)
+    assert cols == NUMERIC_CONTRACT + onehots
+    assert feat.columns == ["city", "timestamp", *cols, "target_temp_next", "target_condition"]

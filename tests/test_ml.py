@@ -88,6 +88,51 @@ def test_train_insufficient_rows_raises(spark):
         train(tiny, min_rows=1000)
 
 
+def test_inference_builds_every_trained_onehot(trained):
+    """Train/serve skew guard: the stored categories hold all four one-hot
+    sources, so inference builds every one-hot the model was trained on
+    itself — none is left to align_features' all-False fill."""
+    from weatherdatapipeline_spark.operators.features import ONE_HOT_COLS, engineer_features
+
+    models, weather = trained
+    assert list(models.categories) == ONE_HOT_COLS
+    trained_onehots = [c for c in models.feature_cols if c.startswith(("hour_", "dayofweek_"))]
+    assert trained_onehots  # the 30-batch history spans midnight
+    cfg = models.feature_config
+    feats, cols = engineer_features(
+        weather,
+        inference=True,
+        categories=models.categories,
+        lags=cfg["lags"],
+        rolling_windows=cfg["rolling_windows"],
+    )
+    assert cols == models.feature_cols
+    row = feats.agg(*[F.max(F.col(c).cast("int")).alias(c) for c in trained_onehots]).first()
+    assert all(row[c] == 1 for c in trained_onehots)
+
+
+def test_registry_entry_without_calendar_levels_still_scores(spark, tmp_path, trained):
+    """Entries logged before the calendar levels were stored hold only
+    city/country categories; they must still load and score (the missing
+    one-hots are aligned in as False, as when they were trained)."""
+    import json
+
+    models, weather = trained
+    reg = LocalRegistry(str(tmp_path))
+    mv = reg.log("old", models, params={})
+    meta = f"{mv.path}/meta.json"
+    with open(meta) as f:
+        entry = json.load(f)
+    entry["categories"] = {k: entry["categories"][k] for k in ("city", "country")}
+    with open(meta, "w") as f:
+        json.dump(entry, f)
+    loaded = reg.load(spark, reg.latest("old"))
+    assert set(loaded.categories) == {"city", "country"}
+    preds = predict(loaded, weather)
+    assert preds.count() == weather.count()
+    assert preds.filter(F.col("pred_temperature").isNotNull()).count() > 0
+
+
 def test_predict_appends_columns_keeps_warmup_rows(trained):
     models, weather = trained
     preds = predict(models, weather)

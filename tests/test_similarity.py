@@ -107,6 +107,31 @@ def test_cosine_zero_vector_is_null_both_impls(spark):
         assert abs(rows[1] - 1 / 3) < 1e-9
 
 
+def test_cosine_to_anchors_zero_norm_is_null_and_ranks_last(spark):
+    """The anchor-matrix UDF agrees with the scalar paths on zero-norm
+    vectors: the cosine is NULL, never NaN, so a descending top-k puts it
+    last instead of first (Spark orders NaN above every double)."""
+    from weatherdatapipeline_spark.operators import similarity as S
+
+    if not S.HAVE_ARROW:
+        pytest.skip("anchor-matrix UDF needs numpy/pandas")
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0]), (1, [1.0, 2.0, 2.0])],
+        "vec_id long, embedding array<float>",
+    )
+    cos = S.cosine_to_anchors_udf([[1.0, 0.0, 0.0], [0.0, 0.0, 0.0]])
+    got = {r["vec_id"]: r["c"] for r in df.select("vec_id", cos(F.col("embedding")).alias("c")).collect()}
+    assert got[0] == [None, None]
+    assert got[1][1] is None and abs(got[1][0] - 1 / 3) < 1e-9
+    ranked = (
+        df.select("vec_id", F.posexplode(cos(F.col("embedding"))).alias("anchor", "c"))
+        .orderBy(F.desc("c"), "vec_id", "anchor")
+        .collect()
+    )
+    assert [(r["vec_id"], r["anchor"]) for r in ranked][0] == (1, 0)
+    assert all(r["c"] is None for r in ranked[1:])
+
+
 def test_assign_to_centroids_argmax_and_ties(spark):
     from pyspark.sql import functions as F
 

@@ -17,7 +17,13 @@ SURVEY.md §7.4; any web framework can wrap this facade).
 
 Each method returns DataFrames / plain dicts, lazily where possible —
 the caller decides when to collect (the reference eagerly materialized
-at every step).
+at every step). The predict endpoints are the exception: they score once,
+sink the scored rows and return a frame over those same rows.
+
+The engine is long-lived, so per-call fixed costs are paid once: the
+Production bundle stays in memory between predict/evaluate calls
+(``train_models`` seeds it with the bundle it just logged) and is reloaded
+from the registry only when the Production version changes.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .ml.pipeline import TrainedModels
 from .ml.pipeline import predict as _predict
 from .ml.pipeline import train as _train
 from .ml.registry import make_registry
@@ -49,6 +56,10 @@ class WeatherEngine:
         self.catalog = TableCatalog(spark, root)
         self.registry = registry or make_registry(f"{root.rstrip('/')}/model_registry")
         self.source = source or (lambda s: synthetic_weather(s, n_batches=1))
+        # (version, path, TrainedModels) of the bundle last trained or
+        # loaded. A registry version directory is written once by the
+        # single writer, so a matching (version, path) is the same models.
+        self._served: tuple[int, str, TrainedModels] | None = None
 
     # --- E-path --------------------------------------------------------
 
@@ -78,6 +89,7 @@ class WeatherEngine:
         raw = self.catalog.read("raw_weather")
         models = _train(raw, **kwargs)
         mv = self.registry.log(MODEL_NAME, models, params=dict(kwargs))
+        self._served = (mv.version, mv.path, models)
         return {"version": mv.version, "stage": mv.stage, "metrics": models.metrics}
 
     def promote(self, version: int, stage: str = "Production") -> dict:
@@ -86,39 +98,45 @@ class WeatherEngine:
 
     # --- P-path --------------------------------------------------------
 
-    def _score_latest(self, limit: int) -> DataFrame:
-        raw = self.catalog.read("raw_weather")
-        latest = raw.orderBy(F.desc("timestamp"), F.desc("city")).limit(limit)
+    def _production_models(self) -> TrainedModels:
         mv = self.registry.get_stage(MODEL_NAME, "Production")
         if mv is None:
             raise RuntimeError("no trained model available — call train_models()")
-        models = self.registry.load(self.spark, mv)
-        return _predict(models, latest)
+        if self._served is None or self._served[:2] != (mv.version, mv.path):
+            self._served = (mv.version, mv.path, self.registry.load(self.spark, mv))
+        return self._served[2]
+
+    def _score_latest(self, limit: int) -> DataFrame:
+        raw = self.catalog.read("raw_weather")
+        latest = raw.orderBy(F.desc("timestamp"), F.desc("city")).limit(limit)
+        return _predict(self._production_models(), latest)
+
+    def _predict_to_sink(self, limit: int, pred_col: str, pred_type: str) -> DataFrame:
+        """Score the latest ``limit`` rows in ONE pass: the scored rows are
+        collected (Arrow keeps timestamps exact), the sink is written from
+        them, and the returned frame is built over those same rows — so it
+        holds no cached blocks and re-collecting it re-runs no model."""
+        preds = self._score_latest(limit)
+        local = self.spark.createDataFrame(preds.toArrow(), schema=preds.schema)
+        self.catalog.append_predictions(
+            local.filter(F.col(pred_col).isNotNull()), pred_type=pred_type
+        )
+        return local.select("city", "timestamp", pred_col)
 
     def predict_temperature(self, limit: int = 100) -> DataFrame:
         """Reference main.py:124-150: latest rows scored, predictions sunk.
 
-        The persist covers the sink write only and is released in
-        ``finally`` — a long-lived engine must not accumulate cached
-        blocks across predict calls (run_etl pairs persist/unpersist the
-        same way). The returned frame stays lazy and valid; re-collecting
-        it recomputes the scoring."""
-        preds = self._score_latest(limit).persist()
-        try:
-            scored = preds.filter(F.col("pred_temperature").isNotNull())
-            self.catalog.append_predictions(scored, pred_type="regression")
-            return preds.select("city", "timestamp", "pred_temperature")
-        finally:
-            preds.unpersist()
+        Eager: the call scores once and appends the non-NULL predictions
+        to the sink. The returned (city, timestamp, pred_temperature)
+        frame is over the at-most-``limit`` rows that were scored, so its
+        non-NULL rows equal the rows sunk by this call, and collecting it
+        again gives the same rows even after later ETL or training."""
+        return self._predict_to_sink(limit, "pred_temperature", "regression")
 
     def predict_weather(self, limit: int = 100) -> DataFrame:
-        preds = self._score_latest(limit).persist()
-        try:
-            scored = preds.filter(F.col("pred_condition").isNotNull())
-            self.catalog.append_predictions(scored, pred_type="classification")
-            return preds.select("city", "timestamp", "pred_condition")
-        finally:
-            preds.unpersist()
+        """Reference main.py:207: as ``predict_temperature``, for the
+        condition class (``pred_condition``)."""
+        return self._predict_to_sink(limit, "pred_condition", "classification")
 
     def evaluate(self, limit: int = 500, persist: bool = False) -> dict:
         """A10 monitoring metrics of Production models on recent history

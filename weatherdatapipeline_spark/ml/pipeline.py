@@ -12,7 +12,9 @@ Mapping (SURVEY.md §3.2):
 - metric fns (training.py:55-57, :83-85) → native evaluators/aggregates
   (MAE, RMSE, accuracy, weighted F1 — A10)
 - feature-schema artifact (training.py:105,:129) → feature_cols list in
-  the registry entry; inference realigns with align_features
+  the registry entry, plus the levels of all four one-hot sources, so
+  inference builds the trained one-hots itself; align_features realigns
+  whatever an entry's levels do not produce
 
 Scale: training data flows through ONE VectorAssembler plan; CV folds are
 filters over a row_number column — no per-fold shuffles. RF fits are the
@@ -138,14 +140,18 @@ def train(
     from pyspark.ml.feature import StringIndexer
     from pyspark.ml.regression import RandomForestRegressor
 
-    from ..operators.features import DEFAULT_LAGS, DEFAULT_ROLLING, discover_categories
+    from ..operators.features import DEFAULT_LAGS, DEFAULT_ROLLING, one_hot_levels
 
-    categories = discover_categories(weather, ["city", "country"])
+    # one scan for all four one-hot sources, shared by every fallback rung
+    # and stored with the model so inference builds the same one-hots
+    categories = one_hot_levels(weather)
     feats = feature_cols = None
     feature_config: dict = {}
     n = 0
     for overrides, accept_floor in FEATURE_FALLBACKS:
-        feats, feature_cols = engineer_features(weather, inference=False, **overrides)
+        feats, feature_cols = engineer_features(
+            weather, inference=False, categories=categories, **overrides
+        )
         feats = with_time_order(feats).persist()
         n = feats.count()
         feature_config = {

@@ -29,12 +29,17 @@ DataFrame — targets are columns, so the positional index alignments
 (J1/J4) disappear; row identity is carried by (city, timestamp).
 
 Scale: the only shuffle is the hash partition on ``city`` for the windows;
-every lag/rolling/one-hot is computed inside that one exchange.
+every lag/rolling/one-hot is computed inside that one exchange. The plan is
+two projections whatever the lag/window/level counts: one ``withColumns``
+for every derived column (calendar, lags, rolling stats, targets), one for
+every one-hot, so building it costs two analyzer passes instead of one per
+column. Category discovery, when the caller passes no levels, is one
+``collect_set`` aggregate over all one-hot sources at once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_LAGS = [1, 3]
@@ -68,16 +73,25 @@ def ensure_event_time(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
 
 
 def discover_categories(df: DataFrame, cols: list[str]) -> dict[str, list]:
-    """Sorted distinct levels per column — what ``pd.get_dummies`` derives
-    implicitly. At training time this is a cheap distinct on low-cardinality
-    columns; the result is persisted as model metadata so inference NEVER
-    re-derives categories from live data (the reference instead patches
-    drift after the fact in ``_align_features``, predict.py:65-88)."""
-    out: dict[str, list] = {}
-    for c in cols:
-        vals = [r[0] for r in df.select(c).distinct().collect() if r[0] is not None]
-        out[c] = sorted(vals)
-    return out
+    """Sorted distinct non-NULL levels per column — what ``pd.get_dummies``
+    derives implicitly. One ``collect_set`` aggregate covers every column
+    (empty input yields empty lists); the result is persisted as model
+    metadata so inference NEVER re-derives categories from live data (the
+    reference instead patches drift after the fact in ``_align_features``,
+    predict.py:65-88)."""
+    row = df.agg(*[F.collect_set(c).alias(c) for c in cols]).first()
+    return {c: sorted(row[c]) for c in cols}
+
+
+def _calendar() -> dict[str, Column]:
+    # F2/F3: pandas dayofweek is Monday=0 → Spark weekday
+    return {"hour": F.hour("timestamp"), "dayofweek": F.weekday("timestamp")}
+
+
+def one_hot_levels(df: DataFrame) -> dict[str, list]:
+    """The levels of every ``ONE_HOT_COLS`` column of raw weather rows — the
+    categories ``engineer_features`` discovers when given none."""
+    return discover_categories(ensure_event_time(df).withColumns(_calendar()), ONE_HOT_COLS)
 
 
 def engineer_features(
@@ -108,53 +122,38 @@ def engineer_features(
     order = [F.col("timestamp")] + ([F.col(tiebreaker_col)] if tiebreaker_col else [])
     w = Window.partitionBy("city").orderBy(*order)
 
-    # temporal features (F2/F3: pandas dayofweek is Monday=0 → weekday)
-    df = df.withColumn("hour", F.hour("timestamp")).withColumn(
-        "dayofweek", F.weekday("timestamp")
-    )
-
-    # W1: per-city lags
+    # ONE projection for every derived column: calendar, W1 per-city lags,
+    # W3/W4 rolling stats with the min_periods=w mask (pandas yields NaN
+    # until the window is full; count over the frame supplies the mask),
+    # W2 targets (lead for next-step temperature, current weather as class)
+    derived = _calendar()
     for lag in lags:
         for short, base in LAG_BASES.items():
-            df = df.withColumn(f"{short}_lag_{lag}", F.lag(base, lag).over(w))
-
-    # W3/W4: rolling with min_periods=w mask (pandas default yields NaN
-    # until the window is full; count over the frame supplies the mask)
+            derived[f"{short}_lag_{lag}"] = F.lag(base, lag).over(w)
     for win in rolling_windows:
         if win and win > 1:
             frame = w.rowsBetween(-(win - 1), 0)
-            cnt_t = F.count("temperature").over(frame)
-            cnt_h = F.count("humidity").over(frame)
-            df = (
-                df.withColumn(
-                    f"temp_rollmean_{win}",
-                    F.when(cnt_t >= win, F.avg("temperature").over(frame)),
-                )
-                .withColumn(
-                    f"temp_rollstd_{win}",
-                    F.when(cnt_t >= win, F.stddev_samp("temperature").over(frame)),
-                )
-                .withColumn(
-                    f"humidity_rollmean_{win}",
-                    F.when(cnt_h >= win, F.avg("humidity").over(frame)),
-                )
+            full_t = F.count("temperature").over(frame) >= win
+            full_h = F.count("humidity").over(frame) >= win
+            derived[f"temp_rollmean_{win}"] = F.when(full_t, F.avg("temperature").over(frame))
+            derived[f"temp_rollstd_{win}"] = F.when(
+                full_t, F.stddev_samp("temperature").over(frame)
             )
-
-    # W2: targets — lead for next-step temperature, current weather as class
-    df = df.withColumn("target_temp_next", F.lead("temperature", 1).over(w)).withColumn(
-        "target_condition", F.col("weather")
-    )
-
-    # F12: one-hot with drop_first semantics over fixed category lists
+            derived[f"humidity_rollmean_{win}"] = F.when(full_h, F.avg("humidity").over(frame))
+    derived["target_temp_next"] = F.lead("temperature", 1).over(w)
+    derived["target_condition"] = F.col("weather")
     if categories is None:
-        categories = discover_categories(df, ONE_HOT_COLS)
-    onehot_cols: list[str] = []
-    for c in ONE_HOT_COLS:
-        levels = categories.get(c, [])
-        for level in levels[1:]:  # drop_first drops the sorted-first level
-            name = f"{c}_{level}"
-            df = df.withColumn(name, (F.col(c) == F.lit(level)).cast("boolean"))
-            onehot_cols.append(name)
+        categories = one_hot_levels(df)
+    df = df.withColumns(derived)
+
+    # F12: one-hot with drop_first semantics over fixed category lists, in
+    # a second projection (they read the calendar columns built above)
+    onehots = {
+        f"{c}_{level}": (F.col(c) == F.lit(level)).cast("boolean")
+        for c in ONE_HOT_COLS
+        for level in categories.get(c, [])[1:]  # drop_first drops the sorted-first level
+    }
+    df = df.withColumns(onehots)
 
     numeric_features = [
         "temperature",
@@ -170,7 +169,7 @@ def engineer_features(
             for p in ("temp_rollmean", "temp_rollstd", "humidity_rollmean")
         ],
     ]
-    feature_cols = numeric_features + onehot_cols
+    feature_cols = numeric_features + list(onehots)
 
     # P6: training-mode validity filter (any-NULL feature or NULL target)
     if not inference:

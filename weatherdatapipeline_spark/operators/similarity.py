@@ -107,7 +107,13 @@ try:  # Arrow scoring path (pandas+numpy are baked into the target env)
         multiplies sqrt(anchor)*... in the same operand order as
         ``_cosine_arrow`` with the anchor as the ``a`` argument — so
         every returned double is bit-identical to
-        ``cosine_similarity(anchor_col, vec_col)`` on the pair row."""
+        ``cosine_similarity(anchor_col, vec_col)`` on the pair row.
+
+        A zero-norm query or anchor has no cosine: its entries are NULL,
+        as in the scalar paths, never NaN (which Spark orders above every
+        double, so it would rank first in a descending top-k). Non-finite
+        results are nulled here rather than left to the pandas->Arrow
+        hop."""
         A = [_np.asarray(c, dtype=_np.float64) for c in anchors]
         a_norms = []
         for c in A:
@@ -128,7 +134,13 @@ try:  # Arrow scoring path (pandas+numpy are baked into the target env)
                     for i in range(d):
                         acc = acc + c[i] * X[:, i]
                     out[:, j] = acc / (a_norms[j] * qn)
-            return _pd.Series(list(out))
+            rows = list(out)
+            bad = ~_np.isfinite(out)
+            for r in _np.flatnonzero(bad.any(axis=1)):
+                row = out[r].astype(object)
+                row[bad[r]] = None
+                rows[r] = row
+            return _pd.Series(rows)
 
         return dists
 
