@@ -109,45 +109,29 @@ def test_quantize_is_map_only(spark, vecs):
 
 
 def test_arrow_and_hof_paths_bit_identical(spark):
-    """The Arrow (pandas UDF) and HOF (JVM) implementations must agree
-    BITWISE — same float64 accumulation order — for quantize, normalize,
-    and cosine. This is what licenses swapping defaults freely."""
+    """The Arrow (pandas UDF) cosine and its HOF (JVM) reference must
+    agree BITWISE — same float64 accumulation order."""
     import random
 
     from pyspark.sql import functions as F
 
-    from weatherdatapipeline_spark.operators import embeddings as E
     from weatherdatapipeline_spark.operators import similarity as S
 
     random.seed(7)
     rows = [
         (i, [random.uniform(-2, 2) for _ in range(17)]) for i in range(50)
     ]
-    rows.append((50, [0.0] * 17))  # all-zero vector (eps guard path)
-    rows.append((51, [1e-9] * 17))  # tiny magnitudes (scale rounding path)
+    rows.append((51, [1e-9] * 17))  # tiny magnitudes
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    nonzero = df.filter(F.col("vec_id") != 50)  # cosine: exclude 0-vector
     q = [float(i % 5 - 2) for i in range(17)]
     qc = F.array(*[F.lit(x) for x in q])
 
-    for name, mk in [
-        ("quantize", lambda impl: E.quantize_int8(df, impl=impl)),
-        (
-            "l2norm",
-            lambda impl: df.select(
-                "vec_id", E.l2_normalize(F.col("embedding"), impl=impl).alias("v")
-            ),
-        ),
-        (
-            "cosine",
-            lambda impl: nonzero.select(
-                "vec_id", S.cosine_similarity(F.col("embedding"), qc, impl=impl).alias("c")
-            ),
-        ),
-    ]:
-        a = sorted(map(tuple, mk("arrow").collect()))
-        h = sorted(map(tuple, mk("hof").collect()))
-        assert a == h, f"{name}: arrow and hof outputs differ"
+    def scored(cosine):
+        return sorted(
+            map(tuple, df.select("vec_id", cosine(F.col("embedding"), qc)).collect())
+        )
+
+    assert scored(S.cosine_similarity) == scored(S.cosine_similarity_hof)
 
 
 def test_covariance_pairs_matches_numpy(spark, sf_dir):
@@ -209,6 +193,45 @@ def test_pca_power_scores_match_eigh_direction(spark, sf_dir):
     a = np.array([got[r["vec_id"]] for r in rows])
     corr = np.corrcoef(a, want)[0, 1]
     assert abs(corr) > 0.999, corr
+
+
+def test_pca_power_scores_empty_input_is_empty_frame(spark):
+    from weatherdatapipeline_spark.operators.embeddings import pca_power_scores
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = pca_power_scores(emb)
+    assert out.columns == ["vec_id", "pc1_score"]
+    assert out.collect() == []
+
+
+def test_pca_power_scores_constant_vectors_score_zero(spark):
+    """Equal vectors have zero covariance, so no top direction: every
+    centred vector scores 0 instead of the squaring dividing by 0."""
+    from weatherdatapipeline_spark.operators.embeddings import pca_power_scores
+
+    emb = spark.createDataFrame(
+        [(i, [1.5, -2.0, 0.25]) for i in range(6)], "vec_id long, embedding array<float>"
+    )
+    got = {r["vec_id"]: r["pc1_score"] for r in pca_power_scores(emb).collect()}
+    assert got == {i: 0.0 for i in range(6)}
+
+
+def test_pca_power_scores_start_orthogonal_to_top_direction(spark):
+    """Vectors [t, -t] have top direction [1, -1]/sqrt(2), orthogonal to
+    the all-ones start vector: the scores are still +-sqrt(2)(t - mean)
+    instead of the normalisation dividing by 0."""
+    import numpy as np
+    from weatherdatapipeline_spark.operators.embeddings import pca_power_scores
+
+    ts = [1.0, 2.0, 3.0, 4.0, 7.5]
+    emb = spark.createDataFrame(
+        [(i, [t, -t]) for i, t in enumerate(ts)], "vec_id long, embedding array<float>"
+    )
+    got = {r["vec_id"]: r["pc1_score"] for r in pca_power_scores(emb).collect()}
+    a = np.array([got[i] for i in range(len(ts))])
+    want = np.sqrt(2.0) * (np.array(ts) - np.mean(ts))
+    sign = np.sign(a @ want)
+    np.testing.assert_allclose(sign * a, want, atol=1e-5)
 
 
 def test_pq_encode_matches_numpy(spark, sf_dir):
@@ -295,12 +318,6 @@ def test_quantize_tolerates_nonfinite_components(spark):
     assert all(-127 <= x <= 127 for v in arr.values() for x in v)
     assert arr[3] == [32, 64, -127]
     assert len(rows_out) == 12  # exploded twin survives the same inputs
-    # the Arrow path mirrors the clamp (np.where on NaN), keeping the
-    # documented cross-impl parity even on corrupt inputs
-    via_arrow = {
-        r["vec_id"]: r["qvec"] for r in quantize_int8(df, impl="arrow").collect()
-    }
-    assert via_arrow == arr
 
 
 def test_kmeans_lloyd_matches_numpy(spark):
@@ -376,8 +393,6 @@ def test_kmeans_arrow_assign_bit_identical_to_fold(spark):
 
     from weatherdatapipeline_spark.operators import embeddings as E
 
-    if not E.HAVE_ARROW:
-        pytest.skip("numpy/pandas absent")
     random.seed(11)
     rows = [(i, [random.uniform(-3, 3) for _ in range(19)]) for i in range(80)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")

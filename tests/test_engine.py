@@ -167,6 +167,18 @@ def test_predict_without_model_raises(spark, tmp_path_factory):
         eng.predict_temperature()
 
 
+def test_default_source_advances_one_poll_per_etl(spark, tmp_path):
+    eng = WeatherEngine(spark, str(tmp_path))
+    for _ in range(4):
+        assert eng.run_etl()["records"] == 10
+    raw = eng.catalog.read("raw_weather")
+    assert raw.count() == 40
+    assert raw.select("city", "timestamp").distinct().count() == 40
+    # poll k is batch k of the generator's own multi-batch feed
+    feed = synthetic_weather(spark, n_batches=4)
+    assert sorted(raw.select(*feed.columns).collect()) == sorted(feed.collect())
+
+
 def test_prepare_training_corpus(spark, sf_dir, tmp_path):
     from weatherdatapipeline_spark.pipelines import prepare_training_corpus
 

@@ -96,14 +96,12 @@ def test_cosine_zero_vector_is_null_both_impls(spark):
         "vec_id long, embedding array<float>",
     )
     q = F.array(F.lit(1.0), F.lit(0.0), F.lit(0.0))
-    for impl in ("hof", "arrow"):
+    for cosine in (S.cosine_similarity, S.cosine_similarity_hof):
         rows = {
             r["vec_id"]: r["c"]
-            for r in df.select(
-                "vec_id", S.cosine_similarity(F.col("embedding"), q, impl=impl).alias("c")
-            ).collect()
+            for r in df.select("vec_id", cosine(F.col("embedding"), q).alias("c")).collect()
         }
-        assert rows[0] is None, f"{impl}: zero vector should be NULL"
+        assert rows[0] is None, f"{cosine.__name__}: zero vector should be NULL"
         assert abs(rows[1] - 1 / 3) < 1e-9
 
 
@@ -113,8 +111,6 @@ def test_cosine_to_anchors_zero_norm_is_null_and_ranks_last(spark):
     last instead of first (Spark orders NaN above every double)."""
     from weatherdatapipeline_spark.operators import similarity as S
 
-    if not S.HAVE_ARROW:
-        pytest.skip("anchor-matrix UDF needs numpy/pandas")
     df = spark.createDataFrame(
         [(0, [0.0, 0.0, 0.0]), (1, [1.0, 2.0, 2.0])],
         "vec_id long, embedding array<float>",

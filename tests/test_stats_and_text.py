@@ -594,3 +594,57 @@ def test_ks_drift_detects_planted_shift(spark):
     got = {r["event_type"]: r for r in ks_drift_by_type(spark, d).collect()}
     assert got["same"]["ks_stat"] == 0.0
     assert got["shift"]["ks_stat"] == 1.0  # fully separated supports
+
+
+# (g, o) -> (w1, w2): tied o values carry equal weights, so the row-frame
+# running sums are the same multiset whichever order the ties are summed in
+_BRS_ROWS = [
+    (g, o, (o * 7) % 5 - 2, o * o + (g == "b"))
+    for g in ("a", "b")
+    for o in (-40, -33, -33, -29, -8, -1, 0, 0, 0, 6, 7, 20, 41, 41, 55)
+    if not (g == "b" and o in (-29, 20))
+]
+
+
+@pytest.mark.parametrize("descending", [False, True])
+@pytest.mark.parametrize("by", [[], ["g"]])
+def test_bucketed_running_sum_matches_global_window(spark, by, descending):
+    """Bucket offsets + bucket-partitioned windows give exactly the plain
+    cumulative sum (ties on the order key, negative and missing bucket
+    ids, two weights, both directions, with and without a group key),
+    and the plan holds no partition-less window."""
+    from pyspark.sql import Window
+
+    from tools.explain_audit import _GLOBAL_WINDOW, plan_of
+    from weatherdatapipeline_spark.operators.stats import bucketed_running_sum
+
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(_BRS_ROWS)], "id long, g string, o long, w1 long, w2 long"
+    ).withColumn("bk", F.floor(F.col("o") / 7))
+    sums = {"c1": "w1", "c2": "w2"}
+    out = bucketed_running_sum(df, "o", "bk", sums, by=by, descending=descending)
+
+    key = F.col("o").desc() if descending else F.col("o")
+    w = Window.partitionBy(*by).orderBy(key).rowsBetween(Window.unboundedPreceding, 0)
+    want = df.select("*", *[F.sum(c).over(w).alias(o) for o, c in sums.items()])
+
+    def rows(frame):
+        return sorted(tuple(r)[1:] for r in frame.select(*want.columns).collect())
+
+    assert out.columns == want.columns
+    assert rows(out) == rows(want)
+    plan = plan_of(out)
+    assert "windowspecdefinition(" in plan and not _GLOBAL_WINDOW.findall(plan)
+
+
+def test_bucketed_running_sum_empty_and_null_bucket(spark):
+    """Empty input gives an empty frame with the output columns; a row
+    with a NULL bucket has no offset and is dropped."""
+    from weatherdatapipeline_spark.operators.stats import bucketed_running_sum
+
+    schema = "o long, w long, bk long"
+    empty = bucketed_running_sum(spark.createDataFrame([], schema), "o", "bk", {"c": "w"})
+    assert empty.columns == ["o", "w", "bk", "c"] and empty.collect() == []
+    df = spark.createDataFrame([(1, 2, 0), (2, 3, None), (3, 4, 1)], schema)
+    got = sorted(tuple(r) for r in bucketed_running_sum(df, "o", "bk", {"c": "w"}).collect())
+    assert got == [(1, 2, 0, 2), (3, 4, 1, 6)]

@@ -28,6 +28,8 @@ from the registry only when the Production version changes.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,15 +39,26 @@ from .ml.pipeline import train as _train
 from .ml.registry import make_registry
 from .operators.stats import batch_statistics
 from .sources.catalog import TableCatalog
-from .sources.synthetic import synthetic_weather
+from .sources.synthetic import CITIES, synthetic_weather
 
 MODEL_NAME = "weather_models"
+
+
+def _synthetic_poll(spark: SparkSession, k: int) -> DataFrame:
+    """Poll ``k`` of the default feed: exactly batch ``k`` of
+    ``synthetic_weather(n_batches=k + 1)``, since a generated row depends
+    only on id + seed and its poll time. Successive polls therefore never
+    repeat a (city, timestamp)."""
+    return synthetic_weather(
+        spark, n_batches=1, seed=42 + k * len(CITIES), start_unix=1_700_000_000 + 300 * k
+    )
 
 
 class WeatherEngine:
     def __init__(self, spark: SparkSession, root: str, source=None, registry=None):
         """``source``: callable(spark) -> DataFrame of WEATHER_RAW rows.
-        Defaults to the synthetic generator; production wires
+        Defaults to the synthetic generator, one new 5-minute poll per
+        ``run_etl`` (a new engine starts the feed over); production wires
         ``sources.rest.ingest`` here (same injection seam the tests use).
         ``registry``: any object with the LocalRegistry interface; defaults
         to make_registry's auto pick — MlflowRegistry where mlflow is
@@ -55,7 +68,9 @@ class WeatherEngine:
         self.spark = spark
         self.catalog = TableCatalog(spark, root)
         self.registry = registry or make_registry(f"{root.rstrip('/')}/model_registry")
-        self.source = source or (lambda s: synthetic_weather(s, n_batches=1))
+        # the default feed advances one poll per call, like the live API
+        polls = itertools.count()
+        self.source = source or (lambda s: _synthetic_poll(s, next(polls)))
         # (version, path, TrainedModels) of the bundle last trained or
         # loaded. A registry version directory is written once by the
         # single writer, so a matching (version, path) is the same models.

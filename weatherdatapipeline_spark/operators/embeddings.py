@@ -1,15 +1,19 @@
 """Embedding-column utilities (SURVEY.md §2.11 adjuncts): L2
-normalization and int8 quantization over ``array<float>`` columns.
+normalization, int8 quantization, PCA, product quantization and k-means
+over ``array<float>`` columns.
 
-Both are map-only (zero shuffles) with two interchangeable physical
-paths: the default pure-JVM ``transform``/``aggregate`` expressions, and
-an Arrow-batched pandas UDF variant (``impl="arrow"``) with identical
-float64 semantics — benchmarked a tie at 64 dims (SCALE.md "HOF vs
-Arrow"; output-array construction dominates), the Arrow path wins as
-vectors get wider. Quantization is the standard
-storage/serving trade for large embedding corpora — 4x smaller vectors
-(int8 vs float32) at ~1% cosine error — and per-vector symmetric scaling
-(``scale = max|x| / 127``) keeps dequantization a one-multiply map.
+Normalization and quantization are map-only (zero shuffles) JVM
+``transform``/``aggregate`` expressions: an Arrow pandas UDF benchmarked
+a tie with them at 64 dims (SCALE.md "HOF vs Arrow"; output-array
+construction dominates both), so they stay UDF-free. Quantization is the
+standard storage/serving trade for large embedding corpora — 4x smaller
+vectors (int8 vs float32) at ~1% cosine error — and per-vector symmetric
+scaling (``scale = max|x| / 127``) keeps dequantization a one-multiply map.
+
+k-means assignment is the one Arrow UDF here (``_sq_dists_arrow_udf``):
+all k centroid distances in one batch pass, folded in the same float64
+order as the HOF reference ``_sq_dist_to_literal``, so the two agree
+bitwise.
 
 Normalization matters upstream of every cosine path in
 ``operators/similarity.py``: unit-norm vectors turn cosine into a plain
@@ -19,97 +23,45 @@ and makes LSH hyperplane signs exact rather than norm-biased.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, DoubleType
 
 from .litfast import darray, darray2
 
 INT8_MAX = 127
 
-try:  # Arrow variants: measured at sf0.1 x256 (512k rows, 64 dims —
-    # SCALE.md "HOF vs Arrow") quantize/normalize are a tie with the HOF
-    # path (output-array construction dominates both), so the JVM path
-    # stays the default here; the variants remain for wider vectors,
-    # where Arrow's per-batch (not per-element) overhead wins. float64 op
-    # order is kept identical so both paths agree bitwise and the oracle
-    # hashes are unchanged either way.
-    import numpy as _np
-    import pandas as _pd
-    from pyspark.sql.functions import pandas_udf as _pandas_udf
-    from pyspark.sql.types import (
-        ArrayType as _ArrayT,
-        DoubleType as _DoubleT,
-        IntegerType as _IntT,
-        StructField as _Field,
-        StructType as _StructT,
-    )
+def _sq_dists_arrow_udf(centroids: list[list[float]]):
+    """Factory: pandas UDF computing squared L2 distance from a vector
+    column to EVERY literal centroid at once (one Arrow batch pass,
+    k*d multiply-adds vectorized over rows).
 
-    # return types as DataType OBJECTS, not DDL strings: a DDL string is
-    # parsed by the JVM at decoration time, which raises
-    # SESSION_OR_CONTEXT_NOT_EXISTS when this module is imported before
-    # the SparkSession exists (bench.py / check_oracle import order) and
-    # silently knocked HAVE_ARROW to False — every "arrow-default" path
-    # was quietly running the interpreted HOF fallback.
-    @_pandas_udf(_ArrayT(_DoubleT()))
-    def _l2_normalize_arrow(v: _pd.Series, eps: _pd.Series) -> _pd.Series:
-        A = _np.stack(v.to_numpy()).astype(_np.float64)
-        acc = _np.zeros(A.shape[0])
-        for i in range(A.shape[1]):  # sequential fold == HOF sum order
-            acc = acc + A[:, i] * A[:, i]
-        n = _np.maximum(_np.sqrt(acc), eps.to_numpy())
-        return _pd.Series(list(A / n[:, None]))
+    Accumulates per-dimension SEQUENTIALLY (``acc = acc + t*t`` over
+    dims 0..d-1) so the float64 op sequence is bit-identical to the
+    interpreted HOF left fold in ``_sq_dist_to_literal`` — the oracle
+    hash cannot tell the two apart (asserted in
+    tests/test_embeddings.py). Measured ~3x faster than the fold at
+    k=8, d=64 (the HOF lambda evaluates interpreted per element;
+    this path is one numpy op per dim per centroid)."""
+    C = [np.asarray(c, dtype=np.float64) for c in centroids]
 
-    @_pandas_udf(_StructT([_Field("scale", _DoubleT()), _Field("qvec", _ArrayT(_IntT()))]))
-    def _quantize_arrow(v: _pd.Series) -> _pd.DataFrame:
-        A = _np.stack(v.to_numpy()).astype(_np.float64)
-        scale = _np.abs(A).max(axis=1) / INT8_MAX
-        safe = _np.maximum(scale, 1e-30)[:, None]
-        x = A / safe
-        # SQL ROUND is HALF_UP (away from zero); np.round is half-to-even
-        q = _np.sign(x) * _np.floor(_np.abs(x) + 0.5)
-        # NaN mirror of the JVM clamp: NaN compares greatest there, so
-        # greatest(NaN,-127)=NaN then least(NaN,127)=127; np.clip would
-        # PROPAGATE NaN and astype(int32) turns it into garbage
-        q = _np.where(_np.isnan(q), float(INT8_MAX), q)
-        q = _np.clip(q, -INT8_MAX, INT8_MAX).astype(_np.int32)
-        return _pd.DataFrame({"scale": scale, "qvec": list(q)})
+    @pandas_udf(ArrayType(DoubleType()))
+    def dists(v: pd.Series) -> pd.Series:
+        X = np.stack(v.to_numpy()).astype(np.float64)
+        n, d = X.shape
+        out = np.empty((n, len(C)), dtype=np.float64)
+        for j, c in enumerate(C):
+            acc = np.zeros(n, dtype=np.float64)
+            for i in range(d):
+                t = X[:, i] - c[i]
+                acc = acc + t * t
+            out[:, j] = acc
+        return pd.Series(list(out))
 
-    def _sq_dists_arrow_udf(centroids: list[list[float]]):
-        """Factory: pandas UDF computing squared L2 distance from a vector
-        column to EVERY literal centroid at once (one Arrow batch pass,
-        k*d multiply-adds vectorized over rows).
-
-        Accumulates per-dimension SEQUENTIALLY (``acc = acc + t*t`` over
-        dims 0..d-1) so the float64 op sequence is bit-identical to the
-        interpreted HOF left fold in ``_sq_dist_to_literal`` — the oracle
-        hash cannot tell the two paths apart (asserted in
-        tests/test_embeddings.py). Measured ~3x faster than the fold at
-        k=8, d=64 (the HOF lambda evaluates interpreted per element;
-        this path is one numpy op per dim per centroid)."""
-        C = [_np.asarray(c, dtype=_np.float64) for c in centroids]
-
-        @_pandas_udf(_ArrayT(_DoubleT()))
-        def dists(v: _pd.Series) -> _pd.Series:
-            X = _np.stack(v.to_numpy()).astype(_np.float64)
-            n, d = X.shape
-            out = _np.empty((n, len(C)), dtype=_np.float64)
-            for j, c in enumerate(C):
-                acc = _np.zeros(n, dtype=_np.float64)
-                for i in range(d):
-                    t = X[:, i] - c[i]
-                    acc = acc + t * t
-                out[:, j] = acc
-            return _pd.Series(list(out))
-
-        return dists
-
-    HAVE_ARROW = True
-except Exception:  # pragma: no cover - numpy/pandas absent
-    HAVE_ARROW = False
-
-# benchmarked tie at 64 dims (SCALE.md) -> keep the no-Python JVM path;
-# pass impl="arrow" per-call for wide vectors
-VECTOR_IMPL = "hof"
+    return dists
 
 
 def l2_norm(vec: Column) -> Column:
@@ -123,17 +75,11 @@ def l2_norm(vec: Column) -> Column:
     )
 
 
-def l2_normalize(vec: Column, eps: float = 1e-12, impl: str | None = None) -> Column:
+def l2_normalize(vec: Column, eps: float = 1e-12) -> Column:
     """Unit-normalize an array column; an all-zero vector stays zero
-    (norm clamped by ``eps``) rather than dividing by zero to NULL/NaN.
-
-    The default is the pure-JVM "hof" path (``VECTOR_IMPL``); pass
-    impl="arrow" per call to run the same float64 math as a vectorized
-    pandas UDF instead (wins as vectors get wider, SCALE.md)."""
+    (norm clamped by ``eps``) rather than dividing by zero to NULL/NaN."""
     if isinstance(vec, str):
         vec = F.col(vec)
-    if (impl or VECTOR_IMPL) == "arrow" and HAVE_ARROW:
-        return _l2_normalize_arrow(vec, F.lit(float(eps)))
     n = F.greatest(l2_norm(vec), F.lit(float(eps)))
     return F.transform(vec, lambda x: x.cast("double") / n)
 
@@ -160,15 +106,13 @@ def quantize_int8(
     vec_col: str = "embedding",
     out_vec_col: str = "qvec",
     scale_col: str = "scale",
-    impl: str | None = None,
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization: adds ``scale`` (double)
     and ``qvec`` (array<int> in [-127, 127]); original float vector is
     dropped. Map-only — no shuffle, no Python.
 
-    Rounding is ``round`` half-up via SQL ROUND (mirrored as
-    sign*floor(abs+0.5) in the Arrow path) to keep the oracle (DuckDB
-    ``round``) bit-identical. For FINITE inputs ``|x| <= max|x| =
+    Rounding is ``round`` half-up via SQL ROUND to keep the oracle
+    (DuckDB ``round``) bit-identical. For FINITE inputs ``|x| <= max|x| =
     127*scale <= 127*safe`` already bounds every quotient to
     [-127, 127]; the least/greatest clamp exists for non-finite
     components — a single NaN or +/-Inf makes the quotient NaN, and
@@ -176,18 +120,7 @@ def quantize_int8(
     job-killing CAST_OVERFLOW, while the clamp degrades it to 127 (NaN
     compares greatest, so greatest(NaN,-127)=NaN, least(NaN,127)=127) —
     one corrupt vector must not abort a corpus-scale run.
-
-    The default is the pure-JVM "hof" path (``VECTOR_IMPL``); pass
-    impl="arrow" per call for one vectorized pandas UDF emitting a
-    (scale, qvec) struct (wins as vectors get wider, SCALE.md).
     """
-    if (impl or VECTOR_IMPL) == "arrow" and HAVE_ARROW:
-        s = _quantize_arrow(F.col(vec_col))
-        return embeddings.select(
-            F.col(id_col),
-            s.getField("scale").alias(scale_col),
-            s.getField("qvec").alias(out_vec_col),
-        )
     # Two projections so the array_max(transform(abs)) pass runs ONCE per
     # row: referencing `scale` both as an output column and inside the
     # quantize lambda within a single select would evaluate it twice, and
@@ -286,7 +219,6 @@ def covariance_pairs(
     values (the PCA path does — its eigenbasis should not inherit an
     oracle-display rounding).
     """
-    import pandas as pd  # noqa: F401 (mapInPandas requires pandas)
 
     def _gram(batches):
         import numpy as np
@@ -340,8 +272,6 @@ def pca_projection_matrix(embeddings: DataFrame, n_components: int, vec_col: str
     deterministic across BLAS builds. Returns (components, eigvals):
     components is (n_components, d) row-major.
     """
-    import numpy as np
-
     rows = covariance_pairs(embeddings, vec_col, round_digits=None).collect()
     if not rows:
         raise ValueError("pca_projection_matrix: embeddings table is empty")
@@ -432,8 +362,6 @@ def pca_power_scores(
     oracle-checked at every SF."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    import numpy as np
-
     def _r(x: float, nd: int) -> float:
         # Spark round(double, nd): BigDecimal.valueOf (shortest decimal
         # repr) then setScale(nd, HALF_UP) — bit-identical replica
@@ -444,18 +372,29 @@ def pca_power_scores(
     # d(d+1)/2 upper-triangle cells: a bounded driver closure of the same
     # class as the centroid/PQ-codebook LUTs (d^2 is corpus-independent)
     tri = covariance_pairs(embeddings, vec_col, round_digits=6).collect()
-    d = max(int(r["j"]) for r in tri) + 1
+    d = 1 + max((int(r["j"]) for r in tri), default=-1)  # 0: no vectors
     C = np.zeros((d, d), dtype="float64")
     for r in tri:
         C[int(r["i"]), int(r["j"])] = r["cov"]
         C[int(r["j"]), int(r["i"])] = r["cov"]
-    for _ in range(squarings):
-        P = C @ C
-        mx = float(np.max(np.abs(P)))
-        C = np.vectorize(lambda t: _r(t / mx, vec_round))(P)
-    wv = [_r(s, vec_round) for s in C.sum(axis=1)]
-    nrm = float(np.sqrt(np.sum(np.array(wv) ** 2)))
-    val = [_r(x / nrm, vec_round) for x in wv]
+    if not C.any():
+        # no vectors, or all of them equal: no top direction, and every
+        # centred vector scores 0 on any direction
+        val = [0.0] * d
+    else:
+        for _ in range(squarings):
+            P = C @ C
+            mx = float(np.max(np.abs(P)))
+            C = np.vectorize(lambda t: _r(t / mx, vec_round))(P)
+        wv = [_r(s, vec_round) for s in C.sum(axis=1)]
+        if not any(wv):
+            # the all-ones start is orthogonal to the top direction (e.g.
+            # vectors of the form [t, -t]). C^(2^s) is then ~rank one, so
+            # its largest column is that direction; the oracle twin
+            # replays only the all-ones start
+            wv = [_r(s, vec_round) for s in C[:, int(np.argmax(np.linalg.norm(C, axis=0)))]]
+        nrm = float(np.sqrt(np.sum(np.array(wv) ** 2)))
+        val = [_r(x / nrm, vec_round) for x in wv]
     v = embeddings.sparkSession.createDataFrame(
         [(i, val[i]) for i in range(d)], "i long, val double"
     )
@@ -610,8 +549,6 @@ def pq_adc_topk(
     literal-array lookups — the point of PQ serving is that NO float
     vector math and no original vectors are touched per row. TakeOrdered
     gives the global top-k without a sort. Returns (id, adc_distance)."""
-    import numpy as np
-
     q = np.asarray(query_vec, dtype="float64")
     m, k, sub_d = _pq_validate(codebooks)
     if q.shape[0] != m * sub_d:
@@ -717,14 +654,7 @@ def _lloyd_state(
     centroids = [[float(x) for x in r[vec_col]] for r in seed_rows]
 
     def assigned(cents) -> DataFrame:
-        # Arrow path: one vectorized batch pass over all k centroids;
-        # bit-identical float64 op order to the HOF fold (see
-        # _sq_dists_arrow_udf), so the choice of path never shows up in
-        # result hashes. Falls back to the pure-JVM fold without numpy.
-        if HAVE_ARROW:
-            dists = _sq_dists_arrow_udf(cents)(F.col(vec_col))
-        else:  # pragma: no cover - numpy/pandas absent
-            dists = F.array(*[_sq_dist_to_literal(vec_col, c) for c in cents])
+        dists = _sq_dists_arrow_udf(cents)(F.col(vec_col))
         staged = embeddings.select(id_col, vec_col, dists.alias("_dists"))
         return staged.select(
             F.col(id_col),

@@ -4,10 +4,7 @@
 Paths
 -----
 - ``cosine_topk``          : brute-force exact top-k for one query vector.
-  Scoring defaults to a vectorized Arrow-batched pandas UDF (numpy over
-  whole record batches; same float64 fold order as the JVM HOF path, so
-  bit-identical — and ~1.5-3x faster at 64 dims, see SCALE.md "HOF vs
-  Arrow"). TakeOrdered top-k, no global sort.
+  TakeOrdered top-k, no global sort.
 - ``knn_join``             : exact top-k for a (small) batch of query
   vectors — broadcast the queries, one pass over the corpus.
 - ``lsh_topk``             : random-hyperplane (sign) LSH bucketing; probes
@@ -19,12 +16,23 @@ Paths
 
 Brute force at 100 TB is a full scan per query — fine for one-off
 analytics, wrong for serving; LSH trades recall for a bounded probe set.
+
+Cosine scoring is a vectorized Arrow-batched pandas UDF (numpy over whole
+record batches, ~1.5-3x faster than per-element JVM lambdas at 64 dims,
+SCALE.md "HOF vs Arrow"). It folds each dot product and norm sequentially
+across dimensions, the same float64 order as ``cosine_similarity_hof``,
+the built-in-function reference the tests and oracles compare against —
+so the two agree bitwise, not merely closely.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, DoubleType
 
 from .litfast import darray
 
@@ -51,8 +59,8 @@ def cosine_similarity_hof(a: Column, b: Column) -> Column:
     """Cosine via built-in higher-order functions. Map-only and UDF-free,
     but Spark evaluates HOF lambdas per-element in the interpreter (outside
     whole-stage codegen), which benchmarks ~1.5-3x slower than the Arrow
-    path at sf0.1 — kept as the no-Python fallback and the semantics
-    reference.
+    path at sf0.1 — kept as the semantics reference the tests compare the
+    Arrow path against.
 
     A zero-norm vector yields NULL (guarded explicitly: under ANSI mode —
     the Spark 4 default — a bare division would otherwise raise
@@ -63,111 +71,95 @@ def cosine_similarity_hof(a: Column, b: Column) -> Column:
     return F.when(den != F.lit(0.0), _dot(a, b) / den)
 
 
-try:  # Arrow scoring path (pandas+numpy are baked into the target env)
-    import numpy as _np
-    import pandas as _pd
-    from pyspark.sql.functions import pandas_udf as _pandas_udf
-    from pyspark.sql.types import ArrayType as _ArrT
-    from pyspark.sql.types import DoubleType as _DoubleT
-
-    def _seq_fold(A: "_np.ndarray", B: "_np.ndarray") -> "_np.ndarray":
-        # accumulate sequentially across dims (vectorized across rows) so
-        # the float64 sum order matches the HOF fold exactly -> results are
-        # bit-identical to cosine_similarity_hof, not merely close
-        acc = _np.zeros(A.shape[0])
-        for i in range(A.shape[1]):
-            acc = acc + A[:, i] * B[:, i]
-        return acc
-
-    # DataType object, not a DDL string: DDL parsing needs a live
-    # SparkContext at decoration time (see embeddings.py note)
-    @_pandas_udf(_DoubleT())
-    def _cosine_arrow(a: _pd.Series, b: _pd.Series) -> _pd.Series:
-        A = _np.stack(a.to_numpy()).astype(_np.float64)
-        B = _np.stack(b.to_numpy()).astype(_np.float64)
-        num = _seq_fold(A, B)
-        den = _np.sqrt(_seq_fold(A, A)) * _np.sqrt(_seq_fold(B, B))
-        with _np.errstate(divide="ignore", invalid="ignore"):
-            out = num / den
-        return _pd.Series(out)
-
-    def cosine_to_anchors_udf(anchors: list[list[float]]):
-        """Factory: pandas UDF scoring a vector column against EVERY row
-        of a FIXED anchor matrix at once, returning array<double> of
-        cosines in anchor order (r15, guide §4.2: the per-pair
-        ``_cosine_arrow`` on an exploded (query x anchor) table ships
-        both full vectors through the Python boundary once PER PAIR —
-        ~129 doubles/pair; this ships each query vector once and returns
-        |anchors| doubles, ~100x less Arrow traffic for a 450-anchor
-        broadcast side — measured the difference on knn_label_prediction
-        at the x5 tier).
-
-        Float contract: per anchor, dot and both norms accumulate
-        SEQUENTIALLY across dims exactly like ``_seq_fold``, and den
-        multiplies sqrt(anchor)*... in the same operand order as
-        ``_cosine_arrow`` with the anchor as the ``a`` argument — so
-        every returned double is bit-identical to
-        ``cosine_similarity(anchor_col, vec_col)`` on the pair row.
-
-        A zero-norm query or anchor has no cosine: its entries are NULL,
-        as in the scalar paths, never NaN (which Spark orders above every
-        double, so it would rank first in a descending top-k). Non-finite
-        results are nulled here rather than left to the pandas->Arrow
-        hop."""
-        A = [_np.asarray(c, dtype=_np.float64) for c in anchors]
-        a_norms = []
-        for c in A:
-            acc = 0.0
-            for i in range(c.shape[0]):
-                acc = acc + c[i] * c[i]
-            a_norms.append(_np.sqrt(acc))
-
-        @_pandas_udf(_ArrT(_DoubleT()))
-        def dists(v: _pd.Series) -> _pd.Series:
-            X = _np.stack(v.to_numpy()).astype(_np.float64)
-            n, d = X.shape
-            qn = _np.sqrt(_seq_fold(X, X))
-            out = _np.empty((n, len(A)), dtype=_np.float64)
-            with _np.errstate(divide="ignore", invalid="ignore"):
-                for j, c in enumerate(A):
-                    acc = _np.zeros(n)
-                    for i in range(d):
-                        acc = acc + c[i] * X[:, i]
-                    out[:, j] = acc / (a_norms[j] * qn)
-            rows = list(out)
-            bad = ~_np.isfinite(out)
-            for r in _np.flatnonzero(bad.any(axis=1)):
-                row = out[r].astype(object)
-                row[bad[r]] = None
-                rows[r] = row
-            return _pd.Series(rows)
-
-        return dists
-
-    HAVE_ARROW = True
-except Exception:  # pragma: no cover - numpy/pandas absent
-    HAVE_ARROW = False
-
-# Arrow wins the sf0.1 bench (see SCALE.md "HOF vs Arrow"): one Python
-# worker round-trip per batch beats per-element interpreted lambdas once
-# vectors are >~16 dims. Flip to "hof" to run fully JVM-side.
-COSINE_IMPL = "arrow" if HAVE_ARROW else "hof"
+def _seq_fold(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    # accumulate sequentially across dims (vectorized across rows) so
+    # the float64 sum order matches the HOF fold exactly -> results are
+    # bit-identical to cosine_similarity_hof, not merely close
+    acc = np.zeros(A.shape[0])
+    for i in range(A.shape[1]):
+        acc = acc + A[:, i] * B[:, i]
+    return acc
 
 
-def cosine_similarity(a: Column, b: Column, impl: str | None = None) -> Column:
-    """Cosine similarity of two array<float> columns in DOUBLE.
+# return type as a DataType OBJECT, not a DDL string: a DDL string is
+# parsed by the JVM at decoration time, which raises
+# SESSION_OR_CONTEXT_NOT_EXISTS when this module is imported before the
+# SparkSession exists (bench.py / check_oracle import order)
+@pandas_udf(DoubleType())
+def _cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
+    A = np.stack(a.to_numpy()).astype(np.float64)
+    B = np.stack(b.to_numpy()).astype(np.float64)
+    num = _seq_fold(A, B)
+    den = np.sqrt(_seq_fold(A, A)) * np.sqrt(_seq_fold(B, B))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        out = num / den
+    return pd.Series(out)
 
-    impl="arrow" (default when numpy is present): vectorized Arrow-batched
-    pandas UDF — same float64 accumulation order as the HOF fold, so the
-    two paths agree bitwise. impl="hof": built-in zip_with/aggregate.
-    """
+
+def cosine_to_anchors_udf(anchors: list[list[float]]):
+    """Factory: pandas UDF scoring a vector column against EVERY row
+    of a FIXED anchor matrix at once, returning array<double> of
+    cosines in anchor order (r15, guide §4.2: the per-pair
+    ``_cosine_arrow`` on an exploded (query x anchor) table ships
+    both full vectors through the Python boundary once PER PAIR —
+    ~129 doubles/pair; this ships each query vector once and returns
+    |anchors| doubles, ~100x less Arrow traffic for a 450-anchor
+    broadcast side — measured the difference on knn_label_prediction
+    at the x5 tier).
+
+    Float contract: per anchor, dot and both norms accumulate
+    SEQUENTIALLY across dims exactly like ``_seq_fold``, and den
+    multiplies sqrt(anchor)*... in the same operand order as
+    ``_cosine_arrow`` with the anchor as the ``a`` argument — so
+    every returned double is bit-identical to
+    ``cosine_similarity(anchor_col, vec_col)`` on the pair row.
+
+    A zero-norm query or anchor has no cosine: its entries are NULL,
+    as in the scalar paths, never NaN (which Spark orders above every
+    double, so it would rank first in a descending top-k). Non-finite
+    results are nulled here rather than left to the pandas->Arrow
+    hop."""
+    A = [np.asarray(c, dtype=np.float64) for c in anchors]
+    a_norms = []
+    for c in A:
+        acc = 0.0
+        for i in range(c.shape[0]):
+            acc = acc + c[i] * c[i]
+        a_norms.append(np.sqrt(acc))
+
+    @pandas_udf(ArrayType(DoubleType()))
+    def dists(v: pd.Series) -> pd.Series:
+        X = np.stack(v.to_numpy()).astype(np.float64)
+        n, d = X.shape
+        qn = np.sqrt(_seq_fold(X, X))
+        out = np.empty((n, len(A)), dtype=np.float64)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            for j, c in enumerate(A):
+                acc = np.zeros(n)
+                for i in range(d):
+                    acc = acc + c[i] * X[:, i]
+                out[:, j] = acc / (a_norms[j] * qn)
+        rows = list(out)
+        bad = ~np.isfinite(out)
+        for r in np.flatnonzero(bad.any(axis=1)):
+            row = out[r].astype(object)
+            row[bad[r]] = None
+            rows[r] = row
+        return pd.Series(rows)
+
+    return dists
+
+
+def cosine_similarity(a: Column, b: Column) -> Column:
+    """Cosine similarity of two array<float> columns in DOUBLE, scored by
+    the Arrow UDF; bitwise equal to :func:`cosine_similarity_hof`. A
+    zero-norm side yields NULL (the NaN converts on the pandas->Arrow
+    hop)."""
     if isinstance(a, str):
         a = F.col(a)
     if isinstance(b, str):
         b = F.col(b)
-    if (impl or COSINE_IMPL) == "arrow" and HAVE_ARROW:
-        return _cosine_arrow(a, b)
-    return cosine_similarity_hof(a, b)
+    return _cosine_arrow(a, b)
 
 
 def cosine_topk(
@@ -218,8 +210,6 @@ def knn_join(
 
 def hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     """Deterministic random hyperplanes for sign-LSH (numpy RandomState)."""
-    import numpy as np
-
     rs = np.random.RandomState(seed)
     return rs.standard_normal((bits, dim)).astype(float).tolist()
 
@@ -516,8 +506,6 @@ def mmr_rerank(
 
     Returns (id, rank, relevance, mmr_score) with rank 1..k; rank 1's
     mmr_score is its relevance (nothing selected yet)."""
-    import numpy as np
-
     short = cosine_topk(embeddings, query_vec, k=shortlist, id_col=id_col, vec_col=vec_col)
     rows = short.join(embeddings.select(id_col, vec_col), id_col).collect()
     rel = {r[id_col]: float(r["cosine"]) for r in rows}

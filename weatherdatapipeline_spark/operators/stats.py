@@ -11,7 +11,10 @@ At 100 TB this is the difference between 10 full-data passes and one.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .relational import banded_histogram
@@ -637,8 +640,6 @@ def kmv_bottom_k(
     sketch locally and a k-row-per-group merge replaces a global
     distinct at any scale. The rank window is group-partitioned, never a
     global order; sketch size is k·|groups| regardless of input size."""
-    from pyspark.sql import Window
-
     h = F.conv(
         F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
     ).cast("bigint")
@@ -661,4 +662,76 @@ def kmv_estimate(sketch: DataFrame, group_col: str, k: int = 64) -> DataFrame:
     return sketch.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sketch"),
         F.round(est).cast("bigint").alias("est_distinct"),
+    )
+
+
+def bucketed_running_sum(
+    df: DataFrame,
+    order: str,
+    bucket: str,
+    sums: dict[str, str],
+    by: Sequence[str] = (),
+    descending: bool = False,
+) -> DataFrame:
+    """``df`` plus one INCLUSIVE running sum per ``sums`` entry
+    (``{out_col: weight_col}``): the sum of ``weight_col`` over every row
+    at or before this one in ``order`` (ascending, or descending with
+    ``descending=True``), restarting per ``by`` group.
+
+    The scale-safe cumulative sum: a window ordered over the whole table
+    (or a whole ``by`` group) runs in ONE task. Instead the caller puts
+    each row in a range bucket (``bucket``, a column monotone in
+    ``order``, e.g. ``floor(value / width)``) and the sum splits in two:
+
+    - the bucket OFFSET, the total weight of every earlier bucket: a
+      per-``(by…, bucket)`` total, left theta self-joined against a
+      broadcast copy of itself on ``bucket <`` (``>`` when descending),
+      ``coalesce(sum, 0)`` for the first bucket — a table of
+      (value range / bucket width) rows, independent of the row count;
+    - the WITHIN-bucket running sum: a ``rowsBetween(unboundedPreceding,
+      0)`` window partitioned by ``(by…, bucket)``, after a broadcast
+      equi-join brings each row its bucket's offset.
+
+    Rows whose ``bucket`` (or ``by`` key) is NULL have no offset and are
+    dropped by that join. Rows tied on ``order`` within a bucket are
+    summed in an unspecified order, so callers order by a unique key
+    (typically a value dictionary) or read only the last row of a tie.
+    A strictly-below sum is the result minus the row's own weight."""
+    keys = [*by, bucket]
+    peer = {k: f"_brs_p_{k}" for k in keys}
+    tot = {w: f"_brs_t{i}" for i, w in enumerate(sums.values())}
+    off = {out: f"_brs_o{i}" for i, out in enumerate(sums)}
+    btot = df.groupBy(*keys).agg(*[F.sum(w).alias(t) for w, t in tot.items()])
+    earlier = (
+        F.col(bucket) > F.col(peer[bucket])
+        if descending
+        else F.col(bucket) < F.col(peer[bucket])
+    )
+    offsets = (
+        btot.select(*[F.col(k).alias(p) for k, p in peer.items()])
+        .join(
+            F.broadcast(btot),
+            reduce(Column.__and__, [F.col(k) == F.col(peer[k]) for k in by] + [earlier]),
+            "left",
+        )
+        .groupBy(*peer.values())
+        .agg(
+            *[
+                F.coalesce(F.sum(tot[w]), F.lit(0)).alias(off[out])
+                for out, w in sums.items()
+            ]
+        )
+    )
+    win = Window.partitionBy(*keys).orderBy(
+        F.col(order).desc() if descending else F.col(order)
+    ).rowsBetween(Window.unboundedPreceding, 0)
+    return (
+        df.join(
+            F.broadcast(offsets),
+            reduce(Column.__and__, [F.col(k) == F.col(p) for k, p in peer.items()]),
+        )
+        .withColumns(
+            {out: F.col(off[out]) + F.sum(w).over(win) for out, w in sums.items()}
+        )
+        .drop(*peer.values(), *off.values())
     )
